@@ -13,7 +13,14 @@ Reference lifecycle (src/engine/engine.py run_load :105-353, run_refresh
   failures, reset on success, 0 disables (T6; reference :99-102, 229-243).
   Divergence note: the reference counts in completion order (thread
   nondeterminism); we count in entry order — deterministic, same contract.
-- session compaction: this run's files merged per table (T7, :246-288)
+- session tail: per table, this run's files are compacted (T7, :246-288)
+  and then the latest-state snapshot is refreshed. The tables' tails are
+  independent (distinct directories), so they run concurrently in a small
+  driver pool, one table per worker, each table's order kept;
+  ``post_refresh_fn`` runs after every tail has finished. Both driver pools
+  (per-table writes and per-table tails) run on
+  ``inheritable_thread_target``: pooled jobs carry the caller's job group,
+  description and local properties, so ``cancelJobGroup`` reaches them.
 
 Semantics preserved on purpose (SURVEY §7 hard-part #5): load mode never
 dedups (re-running a load duplicates rows — by design, README.md:118-121);
@@ -24,9 +31,11 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ctcityscraper_spark.sources.checkpoint import CheckpointStore
 from ctcityscraper_spark.sources.contracts import (
@@ -37,6 +46,7 @@ from ctcityscraper_spark.sources.contracts import (
 from ctcityscraper_spark.sources.http import (
     fetch_and_flatten_distributed,
     fetch_entries_distributed,
+    fetch_status,
 )
 from ctcityscraper_spark.sources.store import ParquetStore
 
@@ -53,6 +63,23 @@ class CircuitBreakerTripped(RuntimeError):
 def _chunks(seq: list, size: int):
     for i in range(0, len(seq), size):
         yield seq[i : i + size]
+
+
+def _pool_map(spark: SparkSession, fn, items: list) -> list:
+    """``[fn(x) for x in items]`` on a driver pool of at most 4 threads,
+    results in order.
+
+    Each call is wrapped on its own, so each carries its own copy of the
+    caller's local properties (job group, description, scheduler pool)."""
+    if not items:
+        return []
+    wrap = inheritable_thread_target(spark)
+    # with pinned threads off there is nothing to inherit, and the session
+    # itself comes back
+    target = fn if wrap is spark else None
+    with ThreadPoolExecutor(max_workers=min(4, len(items))) as tp:
+        futures = [tp.submit(target or wrap(fn), x) for x in items]
+        return [f.result() for f in futures]
 
 
 def _rows_to_df(spark: SparkSession, rows: list[dict]):
@@ -160,18 +187,16 @@ def _run(
             flat = fetch_and_flatten_distributed(
                 spark, source, params.base_url, chunk, **fetch_kw
             ).persist()
+            # every entry has exactly one table=NULL status marker, so the
+            # status is a filter over the cache: one job, no Exchange. The
             # entry-order sort happens driver-side: a Spark orderBy before
             # collect costs a range-partition sampling job per micro-batch
-            # for a <= batch_size-row frame. The total-row count for the
+            # for a <= batch_size-row frame. The data-row count for the
             # coalesce gate rides the SAME action as an Observation (the
-            # status collect materializes the whole cache anyway), so the
-            # old separate flat.count() job disappears (r15; guide §2.4).
+            # status collect materializes the whole cache anyway).
             obs_rows = Observation()
             results = sorted(
-                flat.observe(obs_rows, F.count(F.lit(1)).alias("n"))
-                .select("seq", "invalid", "error")
-                .distinct()
-                .collect(),
+                fetch_status(flat.observe(obs_rows, F.count("table").alias("n"))).collect(),
                 key=lambda r: r.seq,
             )
             flat_rows = int(obs_rows.get["n"])
@@ -208,8 +233,6 @@ def _run(
         if distributed_flatten and batch_error is None:
             # rows never touch the driver: parse row_json with the declared
             # schema and append per table (the bulk-backfill path)
-            from concurrent.futures import ThreadPoolExecutor
-
             from pyspark.sql import functions as F
 
             write_files = 1 if flat_rows <= coalesce_max_rows else None
@@ -236,9 +259,7 @@ def _run(
             # small driver pool (guide §2.6) instead of paying one
             # job+commit round-trip per table serially; stats/bookkeeping
             # mutate only on this thread, in a deterministic order
-            items = list(source.table_schemas.items())
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as tp:
-                table_results = list(tp.map(_write_table, items))
+            table_results = _pool_map(spark, _write_table, list(source.table_schemas.items()))
             for table, (written, skipped) in table_results:
                 stats.rows_written += written
                 stats.rows_skipped += skipped
@@ -293,17 +314,22 @@ def _run(
     if checkpoints and not dedup and last_ok_id is not None:
         checkpoints.save(params.scope_key, last_ok_id, completed + previously_scraped)
 
-    if compact_after:
-        for table in touched_tables:
-            session_files = store.list_files(table) - files_before.get(table, set())
-            if len(session_files) > 1:
-                store.compact(table, only_files=session_files)
+    # session tail, per table: compact this run's files, then refresh the
+    # amortized latest-state snapshot (SCALE.md) over the compacted table.
+    # Tables are independent, so their tails overlap in the driver pool.
+    snapshot_keys = materialize_current or {}
+    session_files = {
+        table: store.list_files(table) - files_before.get(table, set())
+        for table in (touched_tables if compact_after else ())
+    }
 
-    # refresh the amortized latest-state snapshots (SCALE.md) once per run,
-    # piggybacking on the same pass as compaction
-    for table, key in (materialize_current or {}).items():
-        if store.table_exists(table):
-            store.materialize_current(table, key=key)
+    def _tail(table: str) -> None:
+        if len(session_files.get(table, ())) > 1:
+            store.compact(table, only_files=session_files[table])
+        if table in snapshot_keys and store.table_exists(table):
+            store.materialize_current(table, key=snapshot_keys[table])
+
+    _pool_map(spark, _tail, sorted(set(session_files) | set(snapshot_keys)))
 
     if dedup and source.post_refresh_fn is not None:
         # CDC-report hook (reference post_refresh, vgsi/source.py:955-966)

@@ -59,11 +59,6 @@ def token_count_col(text: Column | str) -> Column:
     return F.regexp_count(F.trim(c), F.lit(r"\s+")) + F.lit(1)
 
 
-def char_count_col(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def punct_ratio_col(text: Column | str) -> Column:
     """Fraction of characters that are punctuation (single exact division)."""
     c = F.col(text) if isinstance(text, str) else text

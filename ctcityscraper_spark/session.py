@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults are sized for the test/bench container (local[32],
-128 GiB); the same settings are scale-sane on a real cluster: AQE on
+Local-mode defaults derive from the host: ``local[cores]`` and a driver
+heap of half the physical RAM, at most 48g (``SPARK_DRIVER_MEMORY``
+overrides it). The same settings are scale-sane on a real cluster: AQE on
 (runtime coalesce + skew-join handling), Arrow on (pandas UDF hot paths),
 UTC session timezone (oracle comparability), shuffle partitions ~cores.
 """
@@ -11,6 +12,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical RAM, capped at 48g, as a JVM size string."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(1, min(MAX_DRIVER_MEMORY_MB, phys_mb // 2))}m"
 
 
 def get_spark(
@@ -34,7 +43,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # mergeSchema off by default globally; the store opts in per read
         .config("spark.sql.parquet.mergeSchema", "false")
     )

@@ -16,7 +16,6 @@ from typing import Any, Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ctcityscraper_spark.functions.localdf import local_rows_df
 from ctcityscraper_spark.sources.contracts import SourceDefinition
 from ctcityscraper_spark.sources.ratelimit import partition_bucket
 
@@ -50,6 +49,28 @@ def with_retries(
             sleep(delay * backoff ** (attempt - 1))
 
 
+def _seq_frame(
+    spark: SparkSession, entry_ids: list, num_partitions: int | None
+) -> tuple[DataFrame, int]:
+    """One ``seq`` row per entry (its position in ``entry_ids``), split into
+    the fetch's partitions, and the partition count.
+
+    ``spark.range`` is born partitioned: no Exchange, and no driver-local
+    relation to ship. The fetch function maps ``seq`` back to its entry id
+    by position in the id list it closes over.
+
+    Default partitioning: >=256 entries per partition — Python-worker
+    spin-up (~1-2s each) dwarfs the work for small fetch batches, so tiny
+    chunks must not fan out to every core. Network-bound sources pass
+    num_partitions (=workers) explicitly.
+    """
+    n_parts = num_partitions or max(
+        1, min(spark.sparkContext.defaultParallelism, len(entry_ids) // 256 + 1)
+    )
+    seq_df = spark.range(len(entry_ids), numPartitions=n_parts).withColumnRenamed("id", "seq")
+    return seq_df, n_parts
+
+
 def fetch_entries_distributed(
     spark: SparkSession,
     source: SourceDefinition,
@@ -68,13 +89,8 @@ def fetch_entries_distributed(
     circuit-breaker policy afterwards). This is the Spark restatement of the
     reference's ThreadPoolExecutor loop (src/engine/engine.py:271-308).
     """
-    # default partitioning: >=256 entries per partition — Python-worker
-    # spin-up (~1-2s each) dwarfs the work for small fetch batches, so tiny
-    # chunks must not fan out to every core. Network-bound sources pass
-    # num_partitions (=workers) explicitly.
-    n_parts = num_partitions or max(
-        1, min(spark.sparkContext.defaultParallelism, len(entry_ids) // 256 + 1)
-    )
+    seq_df, n_parts = _seq_frame(spark, entry_ids, num_partitions)
+    ids = [str(e) for e in entry_ids]
     scrape_fn = source.scrape_fn
     invalid_exc = source.invalid_entry_exception
 
@@ -82,7 +98,8 @@ def fetch_entries_distributed(
         bucket = partition_bucket(rate_per_sec, n_parts)
         for pdf in batches:
             out = {"seq": [], "entry_id": [], "payload": [], "invalid": [], "error": []}
-            for seq, entry_id in zip(pdf["seq"], pdf["entry_id"]):
+            for seq in pdf["seq"]:
+                entry_id = ids[seq]
                 bucket.acquire()
                 payload = invalid = err = None
                 try:
@@ -100,26 +117,18 @@ def fetch_entries_distributed(
                     invalid = False
                     err = f"{type(e).__name__}: {e}"
                 out["seq"].append(int(seq))
-                out["entry_id"].append(str(entry_id))
+                out["entry_id"].append(entry_id)
                 out["payload"].append(payload)
                 out["invalid"].append(invalid)
                 out["error"].append(err)
             yield pd.DataFrame(out)
 
-    # Arrow-path local frame (functions/localdf.py): the plain-list form
-    # fans pickled rows across defaultParallelism Python workers before
-    # the repartition (profiled 0.35 s per load on the ingest bench)
-    ids_df = local_rows_df(
-        spark,
-        [(i, str(eid)) for i, eid in enumerate(entry_ids)],
-        ["seq", "entry_id"],
-        "seq long, entry_id string",
-    ).repartition(n_parts)
-    return ids_df.mapInPandas(fetch_partition, FETCH_RESULT_SCHEMA)
+    return seq_df.mapInPandas(fetch_partition, FETCH_RESULT_SCHEMA)
 
 
-# distributed-flatten output: one row per (entry, table, flattened row);
-# entries with no rows (invalid/error/empty) emit a single table=NULL marker
+# distributed-flatten output: one row per (entry, table, flattened row),
+# plus exactly one table=NULL status marker per entry carrying its
+# (seq, invalid, error), so the engine reads status without a shuffle
 FETCH_FLAT_SCHEMA = (
     "seq long, entry_id string, table string, row_json string, "
     "invalid boolean, error string"
@@ -142,13 +151,8 @@ def fetch_and_flatten_distributed(
     ``source.table_schemas`` so the engine can parse ``row_json`` with
     ``from_json`` instead of driver-side inference.
     """
-    # default partitioning: >=256 entries per partition — Python-worker
-    # spin-up (~1-2s each) dwarfs the work for small fetch batches, so tiny
-    # chunks must not fan out to every core. Network-bound sources pass
-    # num_partitions (=workers) explicitly.
-    n_parts = num_partitions or max(
-        1, min(spark.sparkContext.defaultParallelism, len(entry_ids) // 256 + 1)
-    )
+    seq_df, n_parts = _seq_frame(spark, entry_ids, num_partitions)
+    ids = [str(e) for e in entry_ids]
     scrape_fn, flatten_fn = source.scrape_fn, source.flatten_fn
     invalid_exc = source.invalid_entry_exception
 
@@ -156,8 +160,10 @@ def fetch_and_flatten_distributed(
         bucket = partition_bucket(rate_per_sec, n_parts)
         for pdf in batches:
             recs: list[tuple] = []
-            for seq, entry_id in zip(pdf["seq"], pdf["entry_id"]):
+            for seq in pdf["seq"]:
+                seq, entry_id = int(seq), ids[seq]
                 bucket.acquire()
+                invalid, err = False, None
                 try:
                     payload = with_retries(
                         lambda: scrape_fn(base_url, entry_id),
@@ -165,31 +171,28 @@ def fetch_and_flatten_distributed(
                         delay=retry_delay,
                         no_retry=(invalid_exc,),
                     )
-                    emitted = False
                     if payload is not None:
-                        for table, rows in flatten_fn([payload]).items():
-                            for row in rows:
-                                recs.append(
-                                    (int(seq), str(entry_id), table, json.dumps(row), False, None)
-                                )
-                                emitted = True
-                    if not emitted:
-                        recs.append((int(seq), str(entry_id), None, None, False, None))
+                        # built whole first: a flatten that raises emits no rows
+                        recs.extend([
+                            (seq, entry_id, table, json.dumps(row), False, None)
+                            for table, rows in flatten_fn([payload]).items()
+                            for row in rows
+                        ])
                 except invalid_exc:
-                    recs.append((int(seq), str(entry_id), None, None, True, None))
+                    invalid = True
                 except Exception as e:
-                    recs.append(
-                        (int(seq), str(entry_id), None, None, False, f"{type(e).__name__}: {e}")
-                    )
+                    err = f"{type(e).__name__}: {e}"
+                recs.append((seq, entry_id, None, None, invalid, err))
             yield pd.DataFrame(
                 recs, columns=["seq", "entry_id", "table", "row_json", "invalid", "error"]
             )
 
-    # Arrow-path local frame — same rationale as fetch_entries_distributed
-    ids_df = local_rows_df(
-        spark,
-        [(i, str(eid)) for i, eid in enumerate(entry_ids)],
-        ["seq", "entry_id"],
-        "seq long, entry_id string",
-    ).repartition(n_parts)
-    return ids_df.mapInPandas(run_partition, FETCH_FLAT_SCHEMA)
+    return seq_df.mapInPandas(run_partition, FETCH_FLAT_SCHEMA)
+
+
+def fetch_status(flat: DataFrame) -> DataFrame:
+    """(seq, invalid, error) per entry of a :func:`fetch_and_flatten_distributed`
+    frame: its table=NULL markers. A filter, so no Exchange."""
+    from pyspark.sql import functions as F
+
+    return flat.filter(F.col("table").isNull()).select("seq", "invalid", "error")

@@ -15,17 +15,95 @@ Scale notes:
   N-batch-files -> 1, database.py:246-288); at cluster scale the same pass is
   a ``repartition`` rewrite sized by bytes, which ``compact`` approximates
   with a target file size.
+
+Schema resolution: every read (``scan``, ``existing_hashes``,
+``known_entry_ids``, ``compact``, ``materialize_current``,
+``current_snapshot``) hands the reader an explicit schema, so planning a
+read launches no Spark job. Spark stores each file's schema as JSON under
+the footer key ``org.apache.spark.sql.parquet.row.metadata``; the store
+reads that key on the driver with pyarrow and merges the files' schemas by
+name in file-name order, with every field nullable — the same fields and
+types Spark's ``mergeSchema`` inference (a distributed footer-reading job)
+returns. Footers are cached by (path, size, mtime), up to 8192 of them:
+files are immutable, and compaction writes new names. The store falls
+back to Spark's own ``mergeSchema`` inference when any file lacks the key
+(files written by the reference engine's pandas/DuckDB writers), when a
+footer is unreadable (a truncated file: the fallback keeps
+``tolerate_corrupt`` and the fail-fast default exactly as they were), or
+when two files disagree on a column's type or the case of its name.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import shutil
 import uuid as _uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ctcityscraper_spark.functions.hashing import stamp_metadata
+
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """Spark's ``asNullable``: file-source schemas are nullable all the way
+    down, whatever the writer declared."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+@functools.lru_cache(maxsize=8192)
+def _footer_schema(path: str, size: int, mtime_ns: int) -> StructType | None:
+    """The Spark schema a parquet file's footer records, or None when the
+    file has no Spark key or its footer cannot be read. ``size`` and
+    ``mtime_ns`` only key the cache."""
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(SPARK_SCHEMA_KEY)
+        return None if raw is None else _as_nullable(StructType.fromJson(json.loads(raw)))
+    except (OSError, ValueError, KeyError, TypeError):  # pyarrow's ArrowInvalid is a ValueError
+        return None
+
+
+def footer_merged_schema(files: list[str]) -> StructType | None:
+    """Merge the footer schemas of ``files`` by name, in the given order
+    (a new column is appended where it first appears). None means "let
+    Spark infer": no files, a file without the Spark key or with an
+    unreadable footer, or a conflict in a column's type or name case."""
+    fields: dict[str, StructField] = {}
+    for f in files:
+        st = Path(f).stat()
+        schema = _footer_schema(f, st.st_size, st.st_mtime_ns)
+        if schema is None:
+            return None
+        for field in schema.fields:
+            have = fields.setdefault(field.name.lower(), field)
+            if have.name != field.name or have.dataType != field.dataType:
+                return None
+    return StructType(list(fields.values())) if fields else None
+
+
+def _data_files(directory: Path) -> list[str]:
+    """The files Spark's listing reads from a table or snapshot directory:
+    it skips names starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc``)."""
+    if not directory.is_dir():
+        return []
+    return sorted(
+        str(p) for p in directory.iterdir()
+        if p.is_file() and not p.name.startswith(("_", "."))
+    )
 
 
 class ParquetStore:
@@ -53,16 +131,32 @@ class ParquetStore:
         )
 
     # ------------------------------------------------------------------ scans
-    def scan(
-        self,
-        table: str,
-        merge_schema: bool = True,
-        tolerate_corrupt: bool = False,
+    def _read(
+        self, paths: list[str], files: list[str], tolerate_corrupt: bool = False
     ) -> DataFrame:
+        """Read ``paths`` with the merged footer schema of ``files`` (the
+        data files under them), or with Spark's mergeSchema inference when
+        the footers cannot give it."""
+        reader = self.spark.read
+        if tolerate_corrupt:
+            reader = reader.option("ignoreCorruptFiles", "true")
+        schema = footer_merged_schema(files)
+        if schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
+    def _read_dir(self, directory: Path, tolerate_corrupt: bool = False) -> DataFrame:
+        return self._read([str(directory)], _data_files(directory), tolerate_corrupt)
+
+    def scan(self, table: str, tolerate_corrupt: bool = False) -> DataFrame:
         """Universal table scan (reference S1/S2).
 
-        ``mergeSchema`` on by default because schema drift across session
-        files is an expected state (reference database.py:275).
+        The schema is the union by name over every file of the table,
+        because schema drift across session files is an expected state
+        (reference database.py:275). It comes from the files' footers
+        without a Spark job (module docstring).
 
         ``tolerate_corrupt`` sets the per-read ``ignoreCorruptFiles``
         option: a 100 TB lake accumulated over months of ingest WILL
@@ -77,12 +171,7 @@ class ParquetStore:
         reads the way the session-wide
         ``spark.sql.files.ignoreCorruptFiles`` conf would.
         """
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        if tolerate_corrupt:
-            reader = reader.option("ignoreCorruptFiles", "true")
-        return reader.parquet(str(self.table_path(table)))
+        return self._read_dir(self.table_path(table), tolerate_corrupt)
 
     def existing_hashes(self, table: str) -> DataFrame:
         """DISTINCT row_hash — the refresh-dedup state (reference P1/J2).
@@ -91,13 +180,19 @@ class ParquetStore:
         """
         if not self.table_exists(table):
             return self.spark.createDataFrame([], "row_hash string")
-        return self.scan(table, merge_schema=False).select("row_hash").distinct()
+        return self.scan(table).select("row_hash").distinct()
 
     def known_entry_ids(self, table: str, column: str) -> DataFrame:
-        """DISTINCT entry ids, sorted (reference P2, database.py:218-244)."""
+        """DISTINCT entry ids, sorted (reference P2, database.py:218-244).
+
+        The distinct ids are sorted in one partition: the engine collects
+        them to the driver anyway, and a global ``orderBy`` would add a
+        range-sampling job and a second shuffle."""
         if not self.table_exists(table):
             raise FileNotFoundError(f"no data for table {table!r}")
-        return self.scan(table).select(column).distinct().orderBy(column)
+        return (
+            self.scan(table).select(column).distinct().coalesce(1).sortWithinPartitions(column)
+        )
 
     # ------------------------------------------------------------------ sinks
     def append(self, table: str, df: DataFrame) -> None:
@@ -181,12 +276,19 @@ class ParquetStore:
         snapshot directly with zero shuffle. Semantics identical to
         operators.scd2.current by construction. Atomic swap; returns rows.
         """
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         from ctcityscraper_spark.operators.scd2 import current
 
-        snap = current(self.scan(table), key=key, order=order)
+        # the row count rides along with the write: no read-back of tmp
+        obs = Observation()
+        snap = current(self.scan(table), key=key, order=order).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
         tmp = self.snapshot_path(table).parent / f"_tmp_{table}_{_uuid.uuid4().hex[:8]}"
         snap.write.mode("overwrite").option("compression", "zstd").parquet(str(tmp))
-        n = self.spark.read.parquet(str(tmp)).count()
+        n = obs.get["n"]
         dest = self.snapshot_path(table)
         if dest.exists():
             shutil.rmtree(dest)
@@ -203,7 +305,7 @@ class ParquetStore:
             raise FileNotFoundError(
                 f"no current-snapshot for {table!r}; call materialize_current"
             )
-        return self.spark.read.parquet(str(dest))
+        return self._read_dir(dest)
 
     # ------------------------------------------------------------- migration
     def rehash_table(self, table: str, extra_exclude: set[str] | None = None) -> int:
@@ -255,8 +357,9 @@ class ParquetStore:
         """Merge small files -> few files (reference T7, database.py:246-288).
 
         The reference merges one session's batch files into one file with
-        union_by_name. Here: read the given files (or all) with mergeSchema,
-        rewrite sized by bytes, atomically swap. Returns resulting file count.
+        union_by_name. Here: read the given files (or all) with their merged
+        schema, rewrite sized by bytes, atomically swap. Returns resulting
+        file count.
 
         NOTE: DataFrames obtained from ``scan()`` *before* compaction pin the
         old file list and will fail on their next action — re-``scan()`` after
@@ -274,14 +377,11 @@ class ParquetStore:
             return len(files)
         total_bytes = sum(Path(f).stat().st_size for f in files)
         n_out = max(1, round(total_bytes / target_file_bytes))
-        df = self.spark.read.option("mergeSchema", "true").parquet(*files)
+        df = self._read(files, files)
+        # one output file needs no shuffle: coalesce(1) narrows the read
+        df = df.coalesce(1) if n_out == 1 else df.repartition(n_out)
         tmp = self.table_path(table).parent / f"_compact_{table}_{_uuid.uuid4().hex[:8]}"
-        (
-            df.repartition(n_out)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(str(tmp))
-        )
+        df.write.mode("overwrite").option("compression", "zstd").parquet(str(tmp))
         moved = 0
         for part in sorted(tmp.glob("*.parquet")):
             part.rename(self.table_path(table) / f"compacted-{_uuid.uuid4().hex}.parquet")

@@ -1,5 +1,7 @@
 import os
 import sys
+import time
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -68,3 +70,42 @@ def tmp_store(spark, tmp_path):
     from ctcityscraper_spark.sources.store import ParquetStore
 
     return ParquetStore(spark, tmp_path, "newhaven")
+
+
+@pytest.fixture()
+def job_probe(spark):
+    """``with job_probe("name") as jobs:`` runs the block under a fresh job
+    group. After the block, ``jobs["group"]`` holds the ids of the Spark
+    jobs submitted in that group and ``jobs["ungrouped"]`` the ids of jobs
+    submitted meanwhile outside any group (e.g. from a pool thread that did
+    not inherit the caller's local properties)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def _settle(marker: str):
+        # the status store applies listener events in order: once a job of
+        # the marker group is visible, every job submitted before it is too
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(marker):
+            if time.time() > deadline:
+                raise TimeoutError(f"marker job {marker!r} never reached the status store")
+            time.sleep(0.05)
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+    @contextmanager
+    def probe(name: str):
+        _settle(f"{name}-before")
+        ungrouped_before = set(tracker.getJobIdsForGroup(None))
+        jobs: dict[str, set] = {}
+        sc.setJobGroup(name, name)
+        try:
+            yield jobs
+        finally:
+            _settle(f"{name}-after")
+            jobs["group"] = set(tracker.getJobIdsForGroup(name))
+            jobs["ungrouped"] = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+
+    return probe

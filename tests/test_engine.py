@@ -60,11 +60,19 @@ def fake_flatten(payloads):
     return {"properties": props, "buildings": bldgs}
 
 
+def keyed_flatten(payloads):
+    """fake_flatten with a unique per-building key, for building snapshots."""
+    tables = fake_flatten(payloads)
+    for b in tables["buildings"]:
+        b["building_key"] = f"{b['property_uuid']}-{b['bid']}"
+    return tables
+
+
 def make_source(**kw):
     return SourceDefinition(
         name="fake",
         scrape_fn=kw.pop("scrape_fn", fake_scrape),
-        flatten_fn=fake_flatten,
+        flatten_fn=kw.pop("flatten_fn", fake_flatten),
         entry_id_source="properties/pid",
         **kw,
     )
@@ -299,6 +307,22 @@ class TestDistributedFlatten:
         assert len(store2.list_files("buildings")) == 1
         assert store2.scan("buildings").count() == 10
 
+    def test_one_status_marker_per_entry(self, spark):
+        from ctcityscraper_spark.sources.http import (
+            fetch_and_flatten_distributed,
+            fetch_status,
+        )
+
+        src = make_source(table_schemas=self.SCHEMAS)
+        flat = fetch_and_flatten_distributed(
+            spark, src, "", [1, 9001, 8001, 2], retries=0, retry_delay=0
+        )
+        status = sorted(fetch_status(flat).collect())
+        assert [(r.seq, r.invalid, r.error is not None) for r in status] == [
+            (0, False, False), (1, True, False), (2, False, True), (3, False, False)
+        ]
+        assert flat.filter(F.col("table").isNotNull()).count() == 6  # 2 entries x 3 rows
+
     def test_refresh_dedup_in_distributed_mode(self, spark, tmp_store):
         src = make_source(table_schemas=self.SCHEMAS)
         p = ResolvedParams("newhaven", entry_ids=[1, 2, 3])
@@ -319,6 +343,44 @@ class TestSnapshotsAndHooks:
         snap = tmp_store.current_snapshot("properties")
         view = current(tmp_store.scan("properties"))
         assert sorted(r.uuid for r in snap.collect()) == sorted(r.uuid for r in view.collect())
+
+    def test_two_table_refresh_snapshots_match_current(self, spark, tmp_store, job_probe):
+        """The per-table session tails run concurrently: each table's
+        snapshot still equals current(scan(table)), and every pooled job
+        stays in the caller's job group."""
+        from ctcityscraper_spark.operators.scd2 import current
+
+        schemas = {
+            **TestDistributedFlatten.SCHEMAS,
+            "buildings": "property_uuid string, pid long, bid long, year_built long, "
+                         "building_key string",
+        }
+        keys = {"properties": "uuid", "buildings": "building_key"}
+        run_load(spark, tmp_store,
+                 make_source(flatten_fn=keyed_flatten, table_schemas=schemas),
+                 ResolvedParams("newhaven", entry_ids=[1, 2, 3, 4]),
+                 batch_size=2, checkpoint_every=None, retry_delay=0,
+                 materialize_current=keys)
+
+        def changed_scrape(base_url, entry_id):
+            p = fake_scrape(base_url, entry_id)
+            if int(entry_id) in (2, 4):
+                p["assessment_value"] = 1.0
+                p["buildings"][0]["year_built"] = 2024
+            return p
+
+        src = make_source(scrape_fn=changed_scrape, flatten_fn=keyed_flatten,
+                          table_schemas=schemas)
+        with job_probe("two-table-refresh") as jobs:
+            stats = run_refresh(spark, tmp_store, src, ResolvedParams("newhaven", refresh=True),
+                                batch_size=2, retry_delay=0, materialize_current=keys)
+        assert stats.rows_written == 4
+        assert jobs["group"] and jobs["ungrouped"] == set()
+        for table, key in keys.items():
+            snap = tmp_store.current_snapshot(table)
+            view = current(tmp_store.scan(table), key=key).select(*snap.columns)
+            assert sorted(snap.collect()) == sorted(view.collect())
+            assert len(tmp_store.list_files(table)) == 2  # one file per session
 
     def test_post_refresh_hook_sees_changes(self, spark, tmp_store):
         seen = {}

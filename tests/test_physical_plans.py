@@ -46,6 +46,26 @@ class TestPushdownAndPruning:
         assert "EqualTo(uuid,u1)" in plan
 
 
+class TestIngestPlans:
+    def test_fetch_status_has_no_exchange(self, spark):
+        """The engine's per-micro-batch status read is a filter over the
+        fetch frame: one job, no shuffle."""
+        from ctcityscraper_spark.sources.contracts import SourceDefinition
+        from ctcityscraper_spark.sources.http import (
+            fetch_and_flatten_distributed,
+            fetch_status,
+        )
+
+        src = SourceDefinition(
+            name="plan", scrape_fn=lambda url, eid: {"id": eid},
+            flatten_fn=lambda ps: {"t": ps}, table_schemas={"t": "id string"},
+        )
+        flat = fetch_and_flatten_distributed(spark, src, "", list(range(600)))
+        plan = fetch_status(flat)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
+        assert "Exchange" not in plan
+
+
 class TestJoinStrategies:
     @pytest.mark.parametrize(
         "name",

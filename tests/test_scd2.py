@@ -288,3 +288,99 @@ class TestCorruptFileTolerance:
 
         with pytest.raises(Exception):
             tmp_store.scan("properties").collect()
+
+
+def _fields(schema):
+    return {(f.name, f.dataType) for f in schema.fields}
+
+
+class TestFooterResolvedSchema:
+    """Reads take their schema from the files' Spark footer key on the
+    driver: the same (name, type) set Spark's mergeSchema inference gives,
+    all fields nullable, and no Spark job."""
+
+    def _inferred(self, spark, path):
+        return spark.read.option("mergeSchema", "true").parquet(str(path)).schema
+
+    def test_drifted_table_and_snapshot_match_merge_schema(self, tmp_store):
+        from pyspark.sql import functions as F
+
+        from ctcityscraper_spark.sources.store import footer_merged_schema
+
+        spark, path = tmp_store.spark, tmp_store.table_path("t")
+        # batch 1 has a column no later batch has; arr is array<int> with
+        # non-null elements, so nested nullability is exercised too
+        b1 = spark.createDataFrame([Row(uuid="a", old_only=1)]).withColumn(
+            "arr", F.array(F.lit(1))
+        )
+        tmp_store.write_batch("t", b1, scraped_at=T0)
+        tmp_store.write_batch(
+            "t", spark.createDataFrame([Row(uuid="b", added="x")]),
+            scraped_at=T0 + dt.timedelta(days=1),
+        )
+
+        def check():
+            assert footer_merged_schema(sorted(tmp_store.list_files("t"))) is not None
+            got = tmp_store.scan("t").schema
+            assert _fields(got) == _fields(self._inferred(spark, path))
+            assert all(f.nullable for f in got.fields)
+
+        check()
+        tmp_store.compact("t")
+        # a column added after compaction: old_only now lives only in the
+        # compacted (older) file. arr comes back with non-null elements,
+        # while the compacted file recorded it nullable: the merge must not
+        # see that as a type conflict, as Spark's mergeSchema does not
+        tmp_store.write_batch(
+            "t",
+            spark.createDataFrame([Row(uuid="a", later=2.5)]).withColumn(
+                "arr", F.array(F.lit(2))
+            ),
+            scraped_at=T0 + dt.timedelta(days=2),
+        )
+        check()
+        assert tmp_store.scan("t").count() == 3
+
+        assert tmp_store.materialize_current("t") == 2
+        snap = tmp_store.current_snapshot("t")
+        assert _fields(snap.schema) == _fields(self._inferred(spark, tmp_store.snapshot_path("t")))
+        assert all(f.nullable for f in snap.schema.fields)
+        assert sorted(r.uuid for r in snap.collect()) == ["a", "b"]
+
+    def test_footerless_file_falls_back_to_inference(self, tmp_store, job_probe):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from ctcityscraper_spark.sources.store import footer_merged_schema
+
+        spark = tmp_store.spark
+        tmp_store.write_batch(
+            "t", spark.createDataFrame([Row(uuid="a", v=1.0)]), scraped_at=T0
+        )
+        # the reference engine's pandas/DuckDB writers leave no Spark key
+        pq.write_table(
+            pa.table({"uuid": ["b"], "v": [2.0], "row_hash": ["h"]}),
+            tmp_store.table_path("t") / "reference-batch.parquet",
+        )
+        assert footer_merged_schema(sorted(tmp_store.list_files("t"))) is None
+        with job_probe("footerless-scan") as jobs:
+            df = tmp_store.scan("t")
+        assert jobs["group"], "Spark's own inference should have run"
+        assert sorted((r.uuid, r.v) for r in df.collect()) == [("a", 1.0), ("b", 2.0)]
+        assert _fields(df.schema) == _fields(self._inferred(spark, tmp_store.table_path("t")))
+
+    def test_scan_submits_no_spark_job(self, tmp_store, job_probe):
+        write_versions(
+            tmp_store,
+            [
+                (T0, [{"uuid": "u1", "pid": 1, "v": 1.0}]),
+                (T0 + dt.timedelta(days=1), [{"uuid": "u1", "pid": 1, "v": 2.0, "w": "x"}]),
+            ],
+        )
+        tmp_store.materialize_current("properties")
+        with job_probe("footer-scan") as jobs:
+            tmp_store.scan("properties")
+            tmp_store.existing_hashes("properties")
+            tmp_store.current_snapshot("properties")
+        assert jobs["group"] == set()
+        assert jobs["ungrouped"] == set()
