@@ -206,7 +206,7 @@ def winnow_fingerprints(
 def lang_id_sql(text_expr: str) -> str:
     """DuckDB expression mirroring lang_id_col exactly."""
     langs = list(LANG_MARKERS)
-    toks = f"list_distinct(regexp_split_to_array(trim({text_expr}), '[ \t\n\v\f\r]+'))"
+    toks = f"list_distinct(regexp_split_to_array(trim({text_expr}, ' '), '[ \t\n\v\f\r]+'))"
     encs = []
     for i, lang in enumerate(langs):
         markers = ", ".join("'" + w.replace("'", "''") + "'" for w in LANG_MARKERS[lang])
@@ -219,7 +219,7 @@ def lang_id_sql(text_expr: str) -> str:
 def quality_score_sql(text_expr: str) -> str:
     """DuckDB expression mirroring quality_score_col exactly."""
     markers = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
-    toks = f"list_distinct(regexp_split_to_array(trim({text_expr}), '[ \t\n\v\f\r]+'))"
+    toks = f"list_distinct(regexp_split_to_array(trim({text_expr}, ' '), '[ \t\n\v\f\r]+'))"
     length = f"length({text_expr})"
     punct_ratio = (
         f"({length} - length(regexp_replace({text_expr}, '[^\\w \t\n\v\f\r]', '', 'g')))"
@@ -255,11 +255,11 @@ def quality_feature_cols(text: Column | str) -> list[Column]:
 def quality_feature_sqls(text_expr: str) -> list[str]:
     """DuckDB twins of :func:`quality_feature_cols`, same order."""
     markers = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
-    toks = f"list_distinct(regexp_split_to_array(trim({text_expr}), '[ \t\n\v\f\r]+'))"
+    toks = f"list_distinct(regexp_split_to_array(trim({text_expr}, ' '), '[ \t\n\v\f\r]+'))"
     length = f"length({text_expr})"
     return [
         f"(least({length}, 2000) / 2000.0)",
-        f"(least(len(regexp_split_to_array(trim({text_expr}), '[ \t\n\v\f\r]+')), 400)"
+        f"(least(len(regexp_split_to_array(trim({text_expr}, ' '), '[ \t\n\v\f\r]+')), 400)"
         " / 400.0)",
         f"(({length} - length(regexp_replace({text_expr}, '[^\\w \t\n\v\f\r]', '', 'g')))"
         f" / greatest({length}, 1))",

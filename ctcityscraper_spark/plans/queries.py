@@ -19,6 +19,7 @@ Reference parity notes cite /root/reference file:line in each docstring.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -41,9 +42,32 @@ class Query:
 QUERIES: dict[str, Query] = {}
 
 
+# a CTE definition: ``name AS (`` right after WITH, RECURSIVE or a comma
+# (so ``WINDOW w AS (`` and a recursive ``walk(a, b) AS (`` never match)
+_CTE_DEF = re.compile(r"((?:\bWITH|\bRECURSIVE|,)\s+)(\w+) AS \(")
+
+
+def materialize_ctes(sql: str) -> str:
+    """Mark every plain CTE of an oracle ``MATERIALIZED``.
+
+    DuckDB inlines a plain CTE at each reference, so a CTE read from k
+    places re-runs its whole upstream k times, compounding down a chain:
+    the BPE merge replay reads each ``m{k}`` four times per merge step,
+    and the dedup walk oracles re-derive their cascade pairs per
+    recursion step. Materialized, every CTE runs once and the result is
+    the same.
+    """
+    return _CTE_DEF.sub(r"\1\2 AS MATERIALIZED (", sql)
+
+
 def query(name: str, oracle: str | None, headline: bool = False):
     def deco(fn):
-        QUERIES[name] = Query(fn=fn, oracle=oracle, headline=headline, doc=fn.__doc__ or "")
+        QUERIES[name] = Query(
+            fn=fn,
+            oracle=None if oracle is None else materialize_ctes(oracle),
+            headline=headline,
+            doc=fn.__doc__ or "",
+        )
         return fn
 
     return deco
@@ -589,9 +613,9 @@ def q_money_roundtrip(spark, sf_dir):
     oracle="""
     SELECT doc_id,
            regexp_replace(regexp_replace(regexp_replace(
-               lower(trim(source || ' Area:')), '[ \t\n\v\f\r:]+$', ''), '&', 'and'), '[ \t\n\v\f\r]+', '_', 'g')
+               lower(trim(source || ' Area:', ' ')), '[ \t\n\v\f\r:]+$', ''), '&', 'and'), '[ \t\n\v\f\r]+', '_', 'g')
                AS norm_key,
-           length(trim(text)) AS text_len
+           length(trim(text, ' ')) AS text_len
     FROM documents WHERE doc_id < 100 ORDER BY doc_id
     """,
 )

@@ -319,7 +319,7 @@ def q_timeseries_gapfill_locf(spark, sf_dir):
     "text_top_bigrams",
     oracle="""
     WITH toks AS (
-        SELECT regexp_split_to_array(trim(text), '[ \t\n\v\f\r]+') AS t FROM documents),
+        SELECT regexp_split_to_array(trim(text, ' '), '[ \t\n\v\f\r]+') AS t FROM documents),
     bi AS (
         SELECT unnest(list_transform(range(1, len(t)),
                       i -> t[i] || ' ' || t[i+1])) AS bigram

@@ -97,6 +97,10 @@ EMB_VALID = "(SELECT * FROM embeddings WHERE " + VALID_EMB_PRED + ")"
 # RE2's \x0B). Found by hypothesis (TestDsirCrossEngineProperties);
 # pinned by the \x0b adversarial fixture row. Keep the two sides in
 # lockstep: any new oracle regex must use the explicit class, never \s.
+# Same story for trim: Spark's trim strips only ' ' (U+0020) while
+# DuckDB's one-argument trim also strips Unicode spaces (NBSP, U+3000),
+# so a doc '\xa0' was 1 token in Spark and 0 in DuckDB. Every SQL twin
+# spells trim(x, ' '). Also found by TestDsirCrossEngineProperties.
 #
 # Known, DOCUMENTED engine-library boundary (probed, r13): `lower()`
 # itself diverges on context-sensitive Unicode casing — Java lowercases
@@ -108,12 +112,12 @@ EMB_VALID = "(SELECT * FROM embeddings WHERE " + VALID_EMB_PRED + ")"
 # excludes final-sigma contexts and U+0130. Pinned in
 # tests/test_functions.py::test_known_lower_casing_divergence so an
 # engine upgrade that shifts the boundary is noticed.
-TOKS = "regexp_split_to_array(trim(text), '[ \t\n\v\f\r]+')"
+TOKS = "regexp_split_to_array(trim(text, ' '), '[ \t\n\v\f\r]+')"
 
 
 def shingle_sql(n: int, col: str = "text") -> str:
     """DuckDB twin of operators.dedup.shingles_col over column ``col``."""
-    toks = f"regexp_split_to_array(trim({col}), '[ \t\n\v\f\r]+')"
+    toks = f"regexp_split_to_array(trim({col}, ' '), '[ \t\n\v\f\r]+')"
     return (
         f"list_distinct(list_transform(range(0, greatest(len({toks}) - {n - 1}, 0)), "
         f"i -> array_to_string(list_slice({toks}, i + 1, i + {n}), ' ')))"
@@ -161,7 +165,7 @@ def fold_norm_sql(a: str, dims: int) -> str:
     oracle=f"""
     SELECT doc_id,
            len({TOKS}) AS n_tokens,
-           md5(trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g'))) AS fingerprint,
+           md5(trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g'), ' ')) AS fingerprint,
            {quality_score_sql('text')} AS quality,
            {lang_id_sql('text')} AS lang_pred
     FROM documents WHERE doc_id < 300 ORDER BY doc_id
@@ -208,7 +212,7 @@ def q_text_lang_confusion(spark, sf_dir):
            COUNT(*) FILTER (WHERE n_docs > 1) AS n_dup_groups,
            CAST(MIN(keep_id) AS BIGINT) AS first_keep
     FROM (
-        SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g'))) AS fp,
+        SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g'), ' ')) AS fp,
                COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
         FROM documents GROUP BY fp
     )
@@ -227,7 +231,7 @@ def q_dedup_exact(spark, sf_dir):
     )
 
 
-_FP_SQL = r"md5(trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g')))"
+_FP_SQL = r"md5(trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g'), ' '))"
 
 
 @query(
@@ -791,7 +795,7 @@ def winnow_fps_sql(k: int, window: int, where: str = "") -> str:
     gh = f"('0x' || substring(md5('winnow' || substring(c, i, {k})), 1, 15))::BIGINT"
     return f"""
     WITH norm AS (
-        SELECT doc_id, trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g')) AS c
+        SELECT doc_id, trim(regexp_replace(lower(text), '[ \t\n\v\f\r]+', ' ', 'g'), ' ') AS c
         FROM documents {where}
     ), fplists AS (
         SELECT doc_id,
@@ -861,12 +865,12 @@ def _minhash_oracle(k: int, bands: int, n: int) -> str:
         band_rows.append(f"SELECT doc_id, {b} AS band, md5({parts}) AS band_hash FROM sig")
     stacked = "\n        UNION ALL\n        ".join(band_rows)
     return f"""
-    WITH sh AS (
+    WITH msh AS (
         SELECT doc_id, unnest({shingle_sql(n)}) AS shingle FROM documents
     ), sig AS (
         SELECT doc_id,
                {mins}
-        FROM sh GROUP BY doc_id
+        FROM msh GROUP BY doc_id
     ), stacked AS (
         {stacked}
     )
@@ -1146,7 +1150,7 @@ def q_quality_filter_pipeline(spark, sf_dir):
     oracle=r"""
     SELECT doc_id,
            len(regexp_extract_all(text, ' ?[0-9]+| ?[A-Za-z]+| ?[^A-Za-z0-9 \t\n\v\f\r]+')) AS bpe_tokens,
-           len(regexp_split_to_array(trim(text), '[ \t\n\v\f\r]+')) AS ws_tokens
+           len(regexp_split_to_array(trim(text, ' '), '[ \t\n\v\f\r]+')) AS ws_tokens
     FROM documents WHERE doc_id < 500 ORDER BY doc_id
     """,
 )

@@ -55,6 +55,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.fast)
 
 
+def age_stream_files(src) -> None:
+    """Stand-in for sleeping past the filesystem's timestamp granularity
+    between two appends to a file-stream source directory. The file
+    source orders new files by modification time, so shift every file
+    already under ``src`` 1.1 s into the past: the next append then
+    sorts after all of them, as it would after a 1.1 s sleep."""
+    for root, _, files in os.walk(src):
+        for f in files:
+            path = os.path.join(root, f)
+            st = os.stat(path)
+            os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns - 1_100_000_000))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -299,6 +299,42 @@ def test_known_lower_casing_divergence(spark):
     con.close()
 
 
+def test_trim_twins_keep_edge_unicode_spaces(spark):
+    """Spark's trim strips only U+0020; the SQL twins must too (trim(x,
+    ' ')), or a doc that is just a NBSP / ideographic space tokenizes to
+    one token in Spark and none in DuckDB (queries_ext.TOKS comment)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from ctcityscraper_spark.operators.text import normalized_text_col, tokens_col
+    from ctcityscraper_spark.plans.queries_ext import TOKS
+
+    texts = ["\xa0", " \xa0a　 ", "　", "\t a \xa0", "  b  "]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    got = [
+        (r.n, r.c)
+        for r in spark.createDataFrame(rows, "id long, text string")
+        .orderBy("id")
+        .select(
+            F.size(tokens_col("text")).alias("n"),
+            normalized_text_col("text").alias("c"),
+        )
+        .collect()
+    ]
+    con = duckdb.connect()
+    want = [
+        con.execute(
+            f"SELECT len({TOKS}), trim(regexp_replace(lower(text),"
+            " '[ \t\n\v\f\r]+', ' ', 'g'), ' ') FROM (SELECT ? AS text)",
+            [t],
+        ).fetchone()
+        for t in texts
+    ]
+    con.close()
+    assert got == [tuple(w) for w in want]
+    assert got[0] == (1, "\xa0")
+
+
 def test_bind_once_matches_inline_evaluation(spark):
     """bind_once(e, fn) must be value-identical to fn(e) — including the
     null-input path, where the bound lambda variable sees NULL exactly as

@@ -4,6 +4,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from conftest import age_stream_files
+
 from ctcityscraper_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -3711,8 +3713,6 @@ class TestKmeansMaintenanceCycle:
         )
 
     def test_detect_refresh_verify(self, spark, tmp_path):
-        import time as _time
-
         from ctcityscraper_spark.operators.clustering import (
             kmeans_fit_micros,
             sum_kmeans_state,
@@ -3740,7 +3740,7 @@ class TestKmeansMaintenanceCycle:
 
         src = tmp_path / "incoming"
         base.coalesce(1).write.mode("append").parquet(str(src))
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(delta_rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(str(src))

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from conftest import age_stream_files
+
 from ctcityscraper_spark.operators.multimodal import (
     deterministic_fake_decoder,
     extract_features,
@@ -338,8 +340,6 @@ class TestStreaming:
         """Two micro-batches of documents: batch 1 seeds the stored hashed
         window index, batch 2 dedups against it and lands its spans; the
         index then holds both batches' windows."""
-        import time as _time
-
         from ctcityscraper_spark.streaming.events import (
             stream_from_directory,
             streaming_incremental_spans,
@@ -358,7 +358,7 @@ class TestStreaming:
             "doc_id long, text string",
         )
         d1.coalesce(1).write.mode("append").parquet(str(src))
-        _time.sleep(1.1)  # file-source ordering is by modification time
+        age_stream_files(src)
         d2.coalesce(1).write.mode("append").parquet(str(src))
 
         stream = stream_from_directory(
@@ -407,7 +407,6 @@ class TestStreaming:
         probe join is shuffle-free on the index side, and checkpoint replay
         plus a repeated compaction are both no-ops."""
         import re
-        import time as _time
 
         from pyspark.sql import functions as F
 
@@ -432,7 +431,7 @@ class TestStreaming:
             spark.createDataFrame(rows, "doc_id long, text string").coalesce(
                 1
             ).write.mode("append").parquet(str(src))
-            _time.sleep(1.1)  # file-source ordering is by modification time
+            age_stream_files(src)
 
         schema = "doc_id long, text string"
         kwargs = dict(
@@ -529,7 +528,6 @@ class TestStreaming:
         [4, 6); spans across every epoch boundary are still found and
         the full zone still reads all docs."""
         import pathlib
-        import time as _time
 
         from ctcityscraper_spark.streaming.events import (
             _compacted_epochs,
@@ -553,7 +551,7 @@ class TestStreaming:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         kwargs = dict(
             docs_dir=str(tmp_path / "docs"),
@@ -613,8 +611,6 @@ class TestStreaming:
         strictly-before corpus, plus the within-batch self-pair) — the
         streaming sink must land exactly that span set, exactly once,
         including after a checkpoint replay."""
-        import time as _time
-
         from pyspark.sql import functions as F
 
         from ctcityscraper_spark.operators.corpus import (
@@ -642,7 +638,7 @@ class TestStreaming:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)  # file-source ordering is by modification time
+            age_stream_files(src)
 
         # ground truth: batch operators replayed over the same boundaries
         out_cols = [
@@ -819,8 +815,6 @@ class TestStreamingBloom:
         zone bit_or-merges to EXACTLY a fresh build over everything
         ingested, compaction re-aggregates the epoch to <= m/32 word rows,
         and checkpoint replay reprocesses nothing."""
-        import time as _time
-
         from ctcityscraper_spark.operators.dedup import build_bloom_index
         from ctcityscraper_spark.streaming.events import (
             _compacted_epochs,
@@ -842,7 +836,7 @@ class TestStreamingBloom:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)  # file-source ordering is by modification time
+            age_stream_files(src)
 
         kwargs = dict(
             words_dir=str(tmp_path / "words"),
@@ -947,7 +941,6 @@ class TestStreamingBloom:
         upto=4 plus the [4, 6) tail; the merged filter still equals a
         fresh build over all six batches and stays <= m/32 rows."""
         import pathlib
-        import time as _time
 
         from ctcityscraper_spark.operators.dedup import build_bloom_index
         from ctcityscraper_spark.streaming.events import (
@@ -967,7 +960,7 @@ class TestStreamingBloom:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         kwargs = dict(
             words_dir=str(tmp_path / "words"),
@@ -1031,8 +1024,6 @@ class TestStreamingCms:
         (count additivity), the epoch re-aggregates to <= depth*width
         rows, estimates through the merged sketch keep the one-sided
         contract, and checkpoint replay reprocesses nothing."""
-        import time as _time
-
         from pyspark.sql import functions as F
 
         from ctcityscraper_spark.operators.text import (
@@ -1060,7 +1051,7 @@ class TestStreamingCms:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         kwargs = dict(
             cells_dir=str(tmp_path / "cells"),
@@ -1157,8 +1148,6 @@ class TestStreamingGram:
         re-aggregates to <= d^2 rows, pca_components trains off the live
         zone, a dims-mismatched read refuses with the rebuild hint, and
         checkpoint replay reprocesses nothing."""
-        import time as _time
-
         import pytest as _pytest
 
         from ctcityscraper_spark.operators.similarity import (
@@ -1185,7 +1174,7 @@ class TestStreamingGram:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         kwargs = dict(
             gram_dir=str(tmp_path / "gram"),
@@ -1402,8 +1391,6 @@ class TestStreamingDriverState:
         the older epoch's catalog table — so a long-lived streaming
         driver holds at most one table registration per zone and no
         storage blocks."""
-        import time as _time
-
         from ctcityscraper_spark.streaming.events import (
             stream_from_directory,
             streaming_bloom_membership,
@@ -1423,7 +1410,7 @@ class TestStreamingDriverState:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
         try:
             q = streaming_bloom_membership(
                 stream_from_directory(
@@ -1464,8 +1451,6 @@ class TestStreamingKmv:
         rows, the estimate through the merged sketch is exact below k,
         a (k, seed)-mismatched read refuses with the rebuild hint, and
         checkpoint replay reprocesses nothing."""
-        import time as _time
-
         import pytest as _pytest
 
         from ctcityscraper_spark.operators.text import kmv_estimate, kmv_sketch
@@ -1489,7 +1474,7 @@ class TestStreamingKmv:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         kwargs = dict(
             hashes_dir=str(tmp_path / "hashes"),
@@ -1554,8 +1539,6 @@ class TestStreamingQuantile:
         the pure-integer rank rule, a mismatched (k, seed, value_col)
         read refuses with the rebuild hint, and checkpoint replay
         reprocesses nothing."""
-        import time as _time
-
         import pytest as _pytest
 
         from ctcityscraper_spark.operators.text import (
@@ -1582,7 +1565,7 @@ class TestStreamingQuantile:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         kwargs = dict(
             sample_dir=str(tmp_path / "sample"),
@@ -1754,8 +1737,6 @@ class TestStreamingCorpusPrep:
         return q
 
     def test_three_batches_end_to_end_then_restart(self, spark, tmp_path):
-        import time as _time
-
         from ctcityscraper_spark.operators.corpus import pack_sequences
 
         src = str(tmp_path / "incoming")
@@ -1765,7 +1746,7 @@ class TestStreamingCorpusPrep:
             spark.createDataFrame(
                 batch, "doc_id long, text string"
             ).coalesce(1).write.mode("append").parquet(src)
-            _time.sleep(1.1)  # file source orders by modification time
+            age_stream_files(src)
 
         self._run(spark, src, base, ckpt)
 
@@ -1846,8 +1827,6 @@ class TestStreamingCorpusPrep:
         results are still bit-identical to the uncompacted run (the
         count-loss case is pinned separately in
         test_seg_snapshot_count_loss_contract)."""
-        import time as _time
-
         from ctcityscraper_spark.streaming.events import (
             _compacted_epochs,
             read_incremental_zone,
@@ -1860,7 +1839,7 @@ class TestStreamingCorpusPrep:
             spark.createDataFrame(
                 batch, "doc_id long, text string"
             ).coalesce(1).write.mode("append").parquet(src)
-            _time.sleep(1.1)
+            age_stream_files(src)
         self._run(spark, src, base, ckpt, compact_every=2)
 
         stats = {
@@ -1909,8 +1888,6 @@ class TestStreamingCorpusPrep:
         every scored train doc from batch 1 on. Restart stays
         exactly-once; resuming under a different target predicate dies
         on the zone marker."""
-        import time as _time
-
         import pytest as _pytest
 
         src = str(tmp_path / "incoming")
@@ -1920,7 +1897,7 @@ class TestStreamingCorpusPrep:
                 [(d, t, langs.get(d, "en")) for d, t in batch],
                 "doc_id long, text string, lang string",
             ).coalesce(1).write.mode("append").parquet(src)
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         # --- keep-everything threshold: plumbing is a no-op on results ---
         base_k = str(tmp_path / "prep_keep")
@@ -1988,7 +1965,7 @@ class TestStreamingCorpusPrep:
         assert spark.read.parquet(f"{base_d}/stats").count() == before
 
         # resuming under a DIFFERENT target predicate dies on the marker
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(70, "s1 s2 s3", "en")], "doc_id long, text string, lang string"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -2019,8 +1996,6 @@ class TestStreamingCorpusPrep:
         segments keep exact counts, the hot list converges identically,
         restart stays exactly-once, and resuming under different
         pruning knobs dies on the zone marker."""
-        import time as _time
-
         import pytest as _pytest
 
         src = str(tmp_path / "incoming")
@@ -2030,7 +2005,7 @@ class TestStreamingCorpusPrep:
             spark.createDataFrame(
                 batch, "doc_id long, text string"
             ).coalesce(1).write.mode("append").parquet(src)
-            _time.sleep(1.1)
+            age_stream_files(src)
         self._run(spark, src, base, ckpt, compact_every=2, seg_tail_k=0)
 
         from ctcityscraper_spark.streaming.events import (
@@ -2077,7 +2052,7 @@ class TestStreamingCorpusPrep:
 
         # resume under different pruning: must die on the marker, not
         # silently change which segments can ever become hot
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(60, "r1 r2 r3")], "doc_id long, text string"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -2087,8 +2062,6 @@ class TestStreamingCorpusPrep:
             )
 
     def test_config_drift_fails_loudly(self, spark, tmp_path):
-        import time as _time
-
         import pytest as _pytest
 
         src = str(tmp_path / "incoming")
@@ -2100,7 +2073,7 @@ class TestStreamingCorpusPrep:
         self._run(spark, src, base, ckpt)
         # resume under a different split modulus: the next batch must die
         # on the marker check, not silently corrupt five zones at once
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(40, "z1 z2 z3")], "doc_id long, text string"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -2117,14 +2090,12 @@ class TestStreamingCorpusPrep:
         (packs identical to the gate-off run, n_quality_dropped all 0);
         teacher 10.0 labels all negative -> gate drops every train doc
         from batch 1 on (batch-0 survivors are the only packs)."""
-        import time as _time
-
         src = str(tmp_path / "incoming")
         for batch in (self.B1, self.B2, self.B3):
             spark.createDataFrame(
                 batch, "doc_id long, text string"
             ).coalesce(1).write.mode("append").parquet(src)
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         # --- keep-everything teacher: plumbing is a no-op on results ---
         base_k = str(tmp_path / "prep_keep")
@@ -2167,7 +2138,7 @@ class TestStreamingCorpusPrep:
         assert spark.read.parquet(f"{base_d}/stats").count() == before
 
         # resuming under a DIFFERENT teacher dies on the marker check
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(50, "q1 q2 q3")], "doc_id long, text string"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -2184,7 +2155,6 @@ class TestStreamingCorpusPrep:
         silently restamped with the current parameters. Regression for the
         dead 'data but no marker' arm over composite zones."""
         import os
-        import time as _time
 
         import pytest as _pytest
 
@@ -2196,7 +2166,7 @@ class TestStreamingCorpusPrep:
         ).coalesce(1).write.mode("append").parquet(src)
         self._run(spark, src, base, ckpt)
         os.remove(os.path.join(base, "_zone_meta.json"))
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(41, "z1 z2 z3")], "doc_id long, text string"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -2222,13 +2192,11 @@ class TestStreamingIvfPq:
     ]
 
     def _write_batches(self, spark, src):
-        import time as _time
-
         for rows in self.BATCHES:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
     def _all(self, spark):
         return spark.createDataFrame(
@@ -2318,9 +2286,8 @@ class TestStreamingIvfPq:
             spark, str(tmp_path / "ivf_stats"), 3
         ).collect()[0].n_vectors == 6
         # resume under DIFFERENT centroids: first new batch dies loudly
-        import time as _time
 
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(9, [9.0, 9.0, 9.0, 9.0])], self.SCHEMA
         ).coalesce(1).write.mode("append").parquet(str(src))
@@ -2413,13 +2380,11 @@ class TestStreamingKmeansState:
     ]
 
     def _write_batches(self, spark, src):
-        import time as _time
-
         for rows in self.BATCHES:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
     def test_streamed_state_equals_one_shot(self, spark, tmp_path):
         import pytest as _pytest
@@ -2479,9 +2444,8 @@ class TestStreamingKmeansState:
         rows2, _ = read_kmeans_state(spark, str(tmp_path / "km"))
         assert sorted(map(key, sum_kmeans_state(rows2).collect())) == got
         # resume under DIFFERENT centroids: first new batch dies loudly
-        import time as _time
 
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(9, [9.0, 9.0, 9.0, 9.0])], self.SCHEMA
         ).coalesce(1).write.mode("append").parquet(str(src))
@@ -2511,8 +2475,6 @@ class TestStreamingDsir:
     ]
 
     def test_streamed_model_equals_one_shot_and_scores(self, spark, tmp_path):
-        import time as _time
-
         import pytest as _pytest
         from pyspark.sql import functions as F
 
@@ -2533,7 +2495,7 @@ class TestStreamingDsir:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
         allv = spark.createDataFrame(
             [r for b in self.BATCHES for r in b], self.SCHEMA
         )
@@ -2592,7 +2554,7 @@ class TestStreamingDsir:
         rows2, _ = read_dsir_model(spark, str(tmp_path / "dsir"))
         assert sorted(map(key, sum_dsir_models(rows2).collect())) == got
         # resume under a DIFFERENT target predicate: dies on first batch
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(100, "tail doc", "en", "s0", 8)], self.SCHEMA
         ).coalesce(1).write.mode("append").parquet(str(src))
@@ -2615,8 +2577,6 @@ class TestStreamingBm25Index:
     TERMS = ["rare", "common"]
 
     def test_streamed_index_serves_and_restarts(self, spark, tmp_path):
-        import time as _time
-
         import pytest as _pytest
 
         from ctcityscraper_spark.operators.text import (
@@ -2635,7 +2595,7 @@ class TestStreamingBm25Index:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
         allv = spark.createDataFrame(
             [r for b in self.BATCHES for r in b], self.SCHEMA
         )
@@ -2684,7 +2644,7 @@ class TestStreamingBm25Index:
         ).collect())) == fresh
 
         # resume under a DIFFERENT bucket layout: dies on first batch
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame(
             [(9, "tail common doc")], self.SCHEMA
         ).coalesce(1).write.mode("append").parquet(str(src))
@@ -2866,13 +2826,11 @@ class TestStreamingComponents:
     ]
 
     def _write_batches(self, spark, src):
-        import time as _time
-
         for rows in self.BATCHES:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
     def test_streamed_assignment_equals_fresh_cc(self, spark, tmp_path):
         from ctcityscraper_spark.operators.graph import (
@@ -2940,9 +2898,8 @@ class TestStreamingComponents:
         )
 
         # a LATER batch keeps maintaining the compacted zone
-        import time as _time
 
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame([(40, 12)], self.SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(str(src))
@@ -2981,8 +2938,6 @@ class TestStreamingWordFreqs:
     ]
 
     def test_streamed_freqs_train_equals_fresh(self, spark, tmp_path):
-        import time as _time
-
         import pytest as _pytest
 
         from ctcityscraper_spark.operators.bpe import (
@@ -3002,7 +2957,7 @@ class TestStreamingWordFreqs:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
         allv = spark.createDataFrame(
             [r for b in self.BATCHES for r in b], self.SCHEMA
         )
@@ -3048,7 +3003,7 @@ class TestStreamingWordFreqs:
         )
 
         # resume under a DIFFERENT text column: dies on first new batch
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame([(9, "tail doc")], self.SCHEMA).coalesce(
             1
         ).write.mode("append").parquet(str(src))
@@ -3076,8 +3031,6 @@ class TestStreamingDropList:
     ]
 
     def test_streamed_drops_equal_fresh(self, spark, tmp_path):
-        import time as _time
-
         import pytest as _pytest
 
         from pyspark.sql import functions as F
@@ -3101,7 +3054,7 @@ class TestStreamingDropList:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(str(src))
-            _time.sleep(1.1)
+            age_stream_files(src)
 
         def run(quality="length(text) / 1000.0"):
             q = streaming_drop_list(
@@ -3150,7 +3103,7 @@ class TestStreamingDropList:
         ) == got
 
         # resume under a DIFFERENT quality ranking: refuses loudly
-        _time.sleep(1.1)
+        age_stream_files(src)
         spark.createDataFrame([(4, 10)], self.SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(str(src))
